@@ -149,6 +149,7 @@ class ModelBuilder:
         registry: DiskRegistry | None = None,
         version: str = "0.1",
         wide_frame: DataFrame | None = None,
+        revision: str | None = None,
     ):
         self.machine = machine
         self.store = store
@@ -157,6 +158,8 @@ class ModelBuilder:
         # a precomputed aligned frame (e.g. from plans.multi's shared-scan
         # fan-out) — skips this machine's solo scan entirely
         self.wide_frame = wide_frame
+        # the store revision to write into (default: a new one per build)
+        self.revision = revision
 
     @property
     def cache_key(self) -> str:
@@ -301,7 +304,7 @@ class ModelBuilder:
             )
 
         if cv_mode != "cross_val_only" and self.store is not None:
-            path = self.store.dump(model, m.name, metadata)
+            path = self.store.dump(model, m.name, metadata, revision=self.revision)
             if self.registry is not None:
                 rev = path.split("/")[-2]
                 self.registry.write_key(key, rev)
@@ -331,7 +334,13 @@ def build_machines(
     ``share_scans=True`` groups machines whose dataset plans share a prefix
     (provider/resolution/aggregation/interpolation) and runs ONE
     scan+resample per group instead of one per machine (plans.multi) —
-    at lake scale that is N-machines-1-scan instead of N scans."""
+    at lake scale that is N-machines-1-scan instead of N scans; the shared
+    scans are released when the last machine is built.
+
+    Every machine built writes into ONE new store revision, so the
+    revision lists the fleet and unpinned requests resolve for every
+    machine. A machine served from the build cache keeps the revision it
+    was built in."""
     from concurrent.futures import ThreadPoolExecutor
 
     wides: dict[str, DataFrame] = {}
@@ -341,12 +350,18 @@ def build_machines(
         wides = shared_wide_frames(
             spark, {m.name: dataset_from_dict(m.dataset) for m in machines}
         )
+    revision = ModelStore.new_revision()
 
     def one(machine: Machine) -> tuple[str, BuildResult]:
         builder = ModelBuilder(
-            machine, store, registry, wide_frame=wides.get(machine.name)
+            machine, store, registry, wide_frame=wides.get(machine.name),
+            revision=revision,
         )
         return machine.name, builder.build(spark)
 
-    with ThreadPoolExecutor(max_workers=max_workers) as pool:
-        return dict(pool.map(one, machines))
+    try:
+        with ThreadPoolExecutor(max_workers=max_workers) as pool:
+            return dict(pool.map(one, machines))
+    finally:
+        if share_scans:
+            wides.release()

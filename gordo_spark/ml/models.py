@@ -15,7 +15,8 @@ registry (gordo/machine/model/factories/*). Here:
   estimator, scaler fit on y after training, TimeSeriesSplit CV with
   thresholds from the LAST fold's rolling(6).min().max() (diff.py:229-264 —
   deliberately the last fold, not an aggregate), anomaly() emitting the full
-  column block (delegates to operators.anomaly.anomaly_frame).
+  column block (the column plan of operators.anomaly.anomaly_stages, which
+  a model server builds once per loaded model).
 - model registry (``register_model``) mirroring the reference's
   ``register_model_builder`` extension point (gordo/machine/model/register.py).
 """
@@ -29,7 +30,12 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from gordo_spark.ml.cv import timeseries_split
 from gordo_spark.ml.scalers import MinMaxScalerExpr
-from gordo_spark.operators.anomaly import anomaly_frame, fold_threshold
+from gordo_spark.operators.anomaly import (
+    Stage,
+    anomaly_stages,
+    apply_stages,
+    fold_threshold,
+)
 
 _MODEL_REGISTRY: dict[str, type] = {}
 
@@ -344,52 +350,65 @@ class DiffBasedAnomalyDetector:
             "scaler": self.scaler_kind,
         }
 
-    def anomaly(self, X: DataFrame, y: DataFrame, resolution: str = "10T", ts_col: str = "ts") -> DataFrame:
-        targets = self.base.target_cols
-        xy = X.join(
-            y.select(ts_col, *[_q(t).alias(f"_yt_{t}") for t in targets]), ts_col
-        )
+    def anomaly_stages(
+        self, resolution: str = "10T", ts_col: str = "ts", smooth: bool = True
+    ) -> list[Stage]:
+        """The column plan of :meth:`anomaly`, built without a DataFrame. It
+        applies to a frame of ``ts``, the base's feature columns and the
+        targets as ``_yt_<t>`` (X joined with y on ``ts``).
+        ``smooth=False`` leaves the smooth_* block out; nothing else in
+        the block reads it."""
+        base = self.base
+        targets = base.target_cols
         # the error's truth side is ALWAYS the caller's y (diff.py:356-359)
-        # — carried as _y__<t> so a y differing from the X-side tag columns
+        # — carried as _yt_<t> so a y differing from the X-side tag columns
         # is honored; model_input__ stays the X side
-        ycols = [F.col(f"`_yt_{t}`").alias(f"_y__{t}") for t in targets]
-        if getattr(self.base, "offset", 0) == 0 and hasattr(self.base, "predict_exprs"):
+        keep = [
+            F.col(ts_col),
+            *[_q(c) for c in base.feature_cols],
+            *[F.col(f"`_yt_{t}`") for t in targets],
+        ]
+        if getattr(base, "offset", 0) == 0 and hasattr(base, "predict_exprs"):
             # offset-0 expression-model fast path: prediction is a pure
             # column expression, no join needed (J6 — column-block append as
             # one select). Models without predict_exprs (PythonEstimatorModel
             # and friends) take the predict+ts-join path below even at
             # offset 0.
-            aligned = xy.select(
-                ts_col,
-                *[_q(c).alias(c) for c in self.base.feature_cols],
-                *[F.col(f"`_yt_{t}`").alias(t) for t in targets if t not in self.base.feature_cols],
-                *ycols,
-                *self.base.predict_exprs(),
-            )
+            aligned: Stage = [*keep, *base.predict_exprs()]
         else:
-            # lookback models emit len(X) - offset rows keyed by target ts;
+            # lookback models emit offset fewer rows, keyed by target ts;
             # tail alignment is an inner join on ts, never positional
             # arithmetic (J5, gordo/machine/model/utils.py:85-98 semantics)
-            pred = self.base.predict(X, ts_col)
-            aligned = xy.select(
-                ts_col,
-                *[_q(c).alias(c) for c in self.base.feature_cols],
-                *[F.col(f"`_yt_{t}`").alias(t) for t in targets if t not in self.base.feature_cols],
-                *ycols,
-            ).join(pred, ts_col)
-        return anomaly_frame(
+            inputs = [F.col(ts_col), *[_q(c) for c in base.feature_cols]]
+
+            def aligned(xy: DataFrame) -> DataFrame:
+                pred = base.predict(xy.select(*inputs), ts_col)
+                return xy.select(*keep).join(pred, ts_col)
+
+        return [
             aligned,
-            targets,
-            resolution=resolution,
-            scaler_stats=self._affine_stats(),
-            smoothing_method=self.smoothing_method,
-            smoothing_window=self.window,
-            thresholds=self.tag_thresholds_,
-            total_threshold=self.total_threshold_,
-            ts_col=ts_col,
-            y_prefix="_y__",
-            feature_tags=self.base.feature_cols,
+            *anomaly_stages(
+                targets,
+                resolution=resolution,
+                scaler_stats=self._affine_stats(),
+                smoothing_method=self.smoothing_method,
+                smoothing_window=self.window if smooth else None,
+                thresholds=self.tag_thresholds_,
+                total_threshold=self.total_threshold_,
+                ts_col=ts_col,
+                y_prefix="_yt_",
+                feature_tags=base.feature_cols,
+            ),
+        ]
+
+    def anomaly(self, X: DataFrame, y: DataFrame, resolution: str = "10T", ts_col: str = "ts") -> DataFrame:
+        """The full anomaly block of X against y, over the timestamps both
+        carry (a lookback base predicts from those rows too)."""
+        xy = X.join(
+            y.select(ts_col, *[_q(t).alias(f"_yt_{t}") for t in self.base.target_cols]),
+            ts_col,
         )
+        return apply_stages(xy, self.anomaly_stages(resolution, ts_col))
 
 
 @register_model("DiffBasedKFCVAnomalyDetector")

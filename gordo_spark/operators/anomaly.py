@@ -25,14 +25,17 @@ Thresholds (A7/A8): TimeSeriesSplit mode = last CV fold's
 *last* fold, not an aggregate: SURVEY.md §7 hard-parts); KFold mode = 0.99
 quantile of the smoothed out-of-fold error (diff.py:617-635).
 
-Everything here is one ``select`` of column expressions over the aligned
-frame — no joins, no UDFs; thresholds are broadcast scalars. At 100 TB this
-is a narrow map stage fused by whole-stage codegen.
+Everything here is a few ``select``s of column expressions over the aligned
+frame — no joins, no UDFs (bar the ewma smoother); thresholds are broadcast
+scalars. At 100 TB this is a narrow map stage fused by whole-stage codegen.
+The selects are built by ``anomaly_stages`` without a DataFrame, so a model
+server builds them once per model and applies them to every request.
 """
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Callable, Mapping, Sequence
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
@@ -53,6 +56,130 @@ def row_mean_square(cols: Sequence[Column]) -> Column:
     for c in cols[1:]:
         total = total + c * c
     return total / F.lit(float(len(cols)))
+
+
+# A stage of a column plan: the Columns of one ``select``, or a
+# DataFrame -> DataFrame callable where the step is not a select (the
+# applyInPandas EWMA). Stages hold no DataFrame, so a plan built once
+# applies to every frame of the same shape.
+Stage = Sequence[Column] | Callable[[DataFrame], DataFrame]
+
+
+def apply_stages(df: DataFrame, stages: Sequence[Stage]) -> DataFrame:
+    """Apply a column plan built by :func:`anomaly_stages` (or any list of
+    stages) to ``df``."""
+    for stage in stages:
+        df = stage(df) if callable(stage) else df.select(*stage)
+    return df
+
+
+def anomaly_stages(
+    tags: Sequence[str],
+    resolution: str = "10T",
+    output_prefix: str = "model_output__",
+    scaler_stats: Mapping[str, tuple[float, float]] | None = None,
+    smoothing_method: str = "smm",
+    smoothing_window: int | None = 144,
+    thresholds: Mapping[str, float] | None = None,
+    total_threshold: float | None = None,
+    ts_col: str = "ts",
+    y_prefix: str | None = None,
+    feature_tags: Sequence[str] | None = None,
+    machine_col: str | None = None,
+) -> list[Stage]:
+    """The column plan of :func:`anomaly_frame`, built without a DataFrame
+    (same arguments, minus the frame); ``apply_stages(aligned, plan)`` is
+    ``anomaly_frame(aligned, ...)``. A server scoring many requests against
+    one model builds it once."""
+
+    def ycol(t: str) -> Column:
+        return F.col(f"`{y_prefix}{t}`") if y_prefix else F.col("`" + t + "`")
+
+    cols: list[Column] = (
+        [F.col("`" + machine_col + "`")] if machine_col else []
+    ) + [
+        F.col(ts_col).alias("start"),
+        (F.col(ts_col) + F.expr(offset_alias_to_interval(resolution))).alias("end"),
+    ]
+    input_tags = list(feature_tags) if feature_tags is not None else list(tags)
+    for t in input_tags:
+        cols.append(F.col("`" + t + "`").alias(f"model_input__{t}"))
+    for t in tags:
+        cols.append(F.col(f"`{output_prefix}{t}`").alias(f"model_output__{t}"))
+
+    err_u = {t: F.abs(F.col(f"`{output_prefix}{t}`") - ycol(t)) for t in tags}
+    for t in tags:
+        cols.append(err_u[t].alias(f"tag_anomaly_unscaled__{t}"))
+    cols.append(row_mean_square([err_u[t] for t in tags]).alias("total_anomaly_unscaled"))
+
+    if scaler_stats is not None:
+        err_s = {
+            t: F.abs(
+                scale_minmax(F.col(f"`{output_prefix}{t}`"), *scaler_stats[t])
+                - scale_minmax(ycol(t), *scaler_stats[t])
+            )
+            for t in tags
+        }
+        for t in tags:
+            cols.append(err_s[t].alias(f"tag_anomaly_scaled__{t}"))
+        cols.append(row_mean_square([err_s[t] for t in tags]).alias("total_anomaly_scaled"))
+
+    stages: list[Stage] = [cols]
+
+    if smoothing_window:
+        smooth_cols = [f"tag_anomaly_unscaled__{t}" for t in tags] + ["total_anomaly_unscaled"]
+        if scaler_stats is not None:
+            smooth_cols += [f"tag_anomaly_scaled__{t}" for t in tags] + ["total_anomaly_scaled"]
+        if smoothing_method == "ewma":
+            stages.append(
+                partial(
+                    ewma, cols=smooth_cols, span=smoothing_window, ts_col="start",
+                    machine_col=machine_col,
+                )
+            )
+        else:
+            fn = SMOOTHERS[smoothing_method]
+            w = (
+                Window.partitionBy(machine_col) if machine_col else Window.partitionBy()
+            ).orderBy("start")
+            stages.append(
+                [F.col("*")]
+                + [fn(c, smoothing_window, w).alias(f"smooth_{c}") for c in smooth_cols]
+            )
+
+    if thresholds is not None:
+        # `is not None`, not truthiness: a legitimately-zero threshold
+        # (exact-fit fold) must still emit its confidence column, or the
+        # output schema would change shape with the data. Zero thresholds
+        # reproduce the reference's float division (inf, NaN for 0/0)
+        # explicitly — ANSI mode would otherwise raise DIVIDE_BY_ZERO.
+        def _conf(err: Column, th: float) -> Column:
+            if th == 0:
+                return F.when(err > 0, F.lit(float("inf"))).when(
+                    err == 0, F.lit(float("nan"))
+                )
+            return err / F.lit(float(th))
+
+        # tag confidence is ALWAYS unscaled error / unscaled threshold
+        # (diff.py:420 divides unscaled_abs_diff by feature_thresholds_,
+        # which were computed from the unscaled fold mae at diff.py:233)
+        extra = [
+            _conf(
+                F.col(f"`tag_anomaly_unscaled__{t}`"),
+                float(thresholds[t]),
+            ).alias(f"anomaly_confidence__{t}")
+            for t in tags
+            if thresholds.get(t) is not None
+        ]
+        if total_threshold is not None:
+            extra.append(
+                _conf(
+                    F.col("total_anomaly_scaled" if scaler_stats else "total_anomaly_unscaled"),
+                    float(total_threshold),
+                ).alias("total_anomaly_confidence")
+            )
+        stages.append([F.col("*"), *extra])
+    return stages
 
 
 def anomaly_frame(
@@ -91,95 +218,26 @@ def anomaly_frame(
     global single-partition window; the column is carried through the
     output. This is the 100 TB path: N machines = N parallel window
     partitions, never one.
+
+    The plan itself is :func:`anomaly_stages`; this applies it.
     """
-
-    def ycol(t: str) -> Column:
-        return F.col(f"`{y_prefix}{t}`") if y_prefix else F.col("`" + t + "`")
-
-    cols: list[Column] = (
-        [F.col("`" + machine_col + "`")] if machine_col else []
-    ) + [
-        F.col(ts_col).alias("start"),
-        (F.col(ts_col) + F.expr(offset_alias_to_interval(resolution))).alias("end"),
-    ]
-    input_tags = list(feature_tags) if feature_tags is not None else list(tags)
-    for t in input_tags:
-        cols.append(F.col("`" + t + "`").alias(f"model_input__{t}"))
-    for t in tags:
-        cols.append(F.col(f"`{output_prefix}{t}`").alias(f"model_output__{t}"))
-
-    err_u = {t: F.abs(F.col(f"`{output_prefix}{t}`") - ycol(t)) for t in tags}
-    for t in tags:
-        cols.append(err_u[t].alias(f"tag_anomaly_unscaled__{t}"))
-    cols.append(row_mean_square([err_u[t] for t in tags]).alias("total_anomaly_unscaled"))
-
-    if scaler_stats is not None:
-        err_s = {
-            t: F.abs(
-                scale_minmax(F.col(f"`{output_prefix}{t}`"), *scaler_stats[t])
-                - scale_minmax(ycol(t), *scaler_stats[t])
-            )
-            for t in tags
-        }
-        for t in tags:
-            cols.append(err_s[t].alias(f"tag_anomaly_scaled__{t}"))
-        cols.append(row_mean_square([err_s[t] for t in tags]).alias("total_anomaly_scaled"))
-
-    out = aligned.select(*cols)
-
-    if smoothing_window:
-        smooth_cols = [f"tag_anomaly_unscaled__{t}" for t in tags] + ["total_anomaly_unscaled"]
-        if scaler_stats is not None:
-            smooth_cols += [f"tag_anomaly_scaled__{t}" for t in tags] + ["total_anomaly_scaled"]
-        if smoothing_method == "ewma":
-            out = ewma(
-                out, smooth_cols, span=smoothing_window, ts_col="start",
-                machine_col=machine_col,
-            )
-        else:
-            fn = SMOOTHERS[smoothing_method]
-            w = (
-                Window.partitionBy(machine_col) if machine_col else Window.partitionBy()
-            ).orderBy("start")
-            out = out.select(
-                *[F.col("`" + c + "`") for c in out.columns],
-                *[fn(c, smoothing_window, w).alias(f"smooth_{c}") for c in smooth_cols],
-            )
-
-    if thresholds is not None:
-        # `is not None`, not truthiness: a legitimately-zero threshold
-        # (exact-fit fold) must still emit its confidence column, or the
-        # output schema would change shape with the data. Zero thresholds
-        # reproduce the reference's float division (inf, NaN for 0/0)
-        # explicitly — ANSI mode would otherwise raise DIVIDE_BY_ZERO.
-        def _conf(err: Column, th: float) -> Column:
-            if th == 0:
-                return F.when(err > 0, F.lit(float("inf"))).when(
-                    err == 0, F.lit(float("nan"))
-                )
-            return err / F.lit(float(th))
-
-        # tag confidence is ALWAYS unscaled error / unscaled threshold
-        # (diff.py:420 divides unscaled_abs_diff by feature_thresholds_,
-        # which were computed from the unscaled fold mae at diff.py:233)
-        conf = [
-            _conf(
-                F.col(f"`tag_anomaly_unscaled__{t}`"),
-                float(thresholds[t]),
-            ).alias(f"anomaly_confidence__{t}")
-            for t in tags
-            if thresholds.get(t) is not None
-        ]
-        extra = list(conf)
-        if total_threshold is not None:
-            extra.append(
-                _conf(
-                    F.col("total_anomaly_scaled" if scaler_stats else "total_anomaly_unscaled"),
-                    float(total_threshold),
-                ).alias("total_anomaly_confidence")
-            )
-        out = out.select(*[F.col("`" + c + "`") for c in out.columns], *extra)
-    return out
+    return apply_stages(
+        aligned,
+        anomaly_stages(
+            tags,
+            resolution=resolution,
+            output_prefix=output_prefix,
+            scaler_stats=scaler_stats,
+            smoothing_method=smoothing_method,
+            smoothing_window=smoothing_window,
+            thresholds=thresholds,
+            total_threshold=total_threshold,
+            ts_col=ts_col,
+            y_prefix=y_prefix,
+            feature_tags=feature_tags,
+            machine_col=machine_col,
+        ),
+    )
 
 
 def fold_threshold(

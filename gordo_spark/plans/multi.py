@@ -83,16 +83,31 @@ def _grid_aligned(ds: TimeSeriesDataset) -> bool:
     return True
 
 
+class WideFrames(dict):
+    """Machine name -> aligned wide frame, as :func:`shared_wide_frames`
+    returns it; ``release()`` unpersists the shared scans the frames read
+    (call it once every machine's frame has been used)."""
+
+    def __init__(self, frames: dict[str, DataFrame], cached: list[DataFrame]):
+        super().__init__(frames)
+        self.cached = cached
+
+    def release(self) -> None:
+        for df in self.cached:
+            df.unpersist()
+        self.cached = []
+
+
 def shared_wide_frames(
     spark: SparkSession,
     datasets: dict[str, TimeSeriesDataset],
     cache: bool = True,
-) -> dict[str, DataFrame]:
+) -> WideFrames:
     """One aligned wide frame per machine, sharing scans across machines.
 
     Returns lazy DataFrames; the shared long frames are cached (unless
     ``cache=False``) so the first machine's action materializes the scan
-    and every later machine reuses it.
+    and every later machine reuses it, until ``release()``.
 
     Only scan -> resample is shared; regularize/interpolate run per machine
     AFTER its range clip, so gap fills never use anchors a solo scan would
@@ -110,6 +125,7 @@ def shared_wide_frames(
             solo.append(name)
 
     frames: dict[str, DataFrame] = {}
+    cached: list[DataFrame] = []
     for name in solo:
         frames[name] = datasets[name].wide_frame(spark)
     for names in groups.values():
@@ -133,6 +149,7 @@ def shared_wide_frames(
         res = proto.long_resampled(spark)
         if cache and len(members) > 1:
             res = res.cache()
+            cached.append(res)
         for name, ds in members.items():
             # multi-aggregation plans melt to <tag>__<agg> series names
             part = res.filter(F.col("tag").isin(ds._expand(ds.all_tags)))
@@ -141,7 +158,7 @@ def shared_wide_frames(
             if ds.train_end_date is not None:
                 part = part.filter(F.col("ts") < F.lit(ds.train_end_date))
             frames[name] = ds.finalize_wide(ds.fill(part))
-    return frames
+    return WideFrames(frames, cached)
 
 
 def fleet_spec_frame(

@@ -51,15 +51,20 @@ from urllib.parse import parse_qs
 from gordo_spark import __version__ as _version
 from gordo_spark.serving import (
     _load as _serving_load,
-    anomaly_response,
     metadata_response,
-    prediction_response,
+    score_anomaly,
+    score_prediction,
 )
-from gordo_spark.sources.serving_io import (
+from gordo_spark.sources.serving_io import (  # noqa: F401
     dataframe_from_parquet_bytes,
     dataframe_into_parquet_bytes,
+    frame_from_parquet_bytes,
 )
 from gordo_spark.sources.store import ModelStore
+
+# The request path no longer calls the dataframe_* adapters imported
+# above; they stay importable here because perfbench/workloads.py
+# (SERVE_TARGETS) wraps these names in this module.
 
 revision_re = re.compile(r"^\d+$")
 
@@ -211,12 +216,12 @@ class GordoServer:
             if route in ("metadata", "healthcheck") and method == "GET":
                 # /healthcheck also serves metadata (base.py:137-160)
                 resp = metadata_response(self.store_root, machine, revision)
-                return self._stamped(resp, args)
+                return self._stamped(resp)
             if route == "download-model" and method == "GET":
                 # serialized copy of the served model (base.py:164-180)
                 import pickle
 
-                model, _, rev = _serving_load(self.store_root, machine, revision)
+                model, _, rev, _ = _serving_load(self.store_root, machine, revision)
                 return (
                     "200 OK",
                     [
@@ -228,14 +233,14 @@ class GordoServer:
                 )
             if route == "prediction" and method == "POST":
                 payload = self._payload(environ)
-                resp = prediction_response(
+                scored = score_prediction(
                     self.spark, self.store_root, machine, payload, revision
                 )
-                return self._stamped(resp, args)
+                return self._scored(scored, args)
             if route == "anomaly/prediction" and method == "POST":
                 payload = self._payload(environ)
                 try:
-                    resp = anomaly_response(
+                    scored = score_anomaly(
                         self.spark,
                         self.store_root,
                         machine,
@@ -244,12 +249,12 @@ class GordoServer:
                         all_columns=_truthy(args.get("all_columns")),
                     )
                 except AttributeError:
-                    # model has no .anomaly -> 422 (blueprints/anomaly.py:55)
+                    # model has no anomaly plan -> 422 (blueprints/anomaly.py:55)
                     return self._json(
                         422,
                         {"error": "model does not support anomaly detection"},
                     )
-                return self._stamped(resp, args)
+                return self._scored(scored, args)
         except FileNotFoundError as exc:
             return self._json(404, {"error": str(exc)})
         except (ValueError, KeyError) as exc:
@@ -274,8 +279,8 @@ class GordoServer:
             for part in msg.get_payload():
                 name = part.get_param("name", header="content-disposition")
                 if name in ("X", "y"):
-                    payload[name] = dataframe_from_parquet_bytes(
-                        self.spark, part.get_payload(decode=True)
+                    payload[name] = frame_from_parquet_bytes(
+                        part.get_payload(decode=True)
                     )
             if "X" not in payload:
                 raise ValueError("multipart request requires an X part")
@@ -304,34 +309,24 @@ class GordoServer:
             _json_bytes(obj),
         )
 
-    def _stamped(self, resp: dict, args: dict):
-        """Stamp the served revision into body + header; honor
-        ?format=parquet for data-carrying responses."""
+    def _stamped(self, resp: dict):
+        """Stamp the served revision into body + header."""
         rev = str(resp.get("revision", ""))
-        if args.get("format") == "parquet" and "data" in resp:
-            # data was already shaped to a dict; reshape via pandas for the
-            # parquet body (reference sends the frame itself)
-            import pandas as pd
+        return self._json(200, resp, headers=[("revision", rev)])
 
-            flat: dict = {}
-            for top, val in resp["data"].items():
-                if isinstance(val, dict) and all(
-                    isinstance(v, dict) for v in val.values()
-                ):
-                    for second, series in val.items():
-                        flat[f"{top}__{second}"] = series
-                else:
-                    flat[top] = val
-            pdf = pd.DataFrame(flat)
-            body = dataframe_into_parquet_bytes(
-                self.spark.createDataFrame(pdf)
-            )
+    def _scored(self, scored, args: dict):
+        """A scored request's response, stamped like :meth:`_stamped`;
+        ``?format=parquet`` sends the frame as parquet bytes."""
+        if args.get("format") == "parquet":
             return (
                 "200 OK",
-                [("Content-Type", "application/octet-stream"), ("revision", rev)],
-                body,
+                [
+                    ("Content-Type", "application/octet-stream"),
+                    ("revision", scored.revision),
+                ],
+                scored.parquet(),
             )
-        return self._json(200, resp, headers=[("revision", rev)])
+        return self._stamped(scored.response())
 
 
 def _truthy(v: str | None) -> bool:

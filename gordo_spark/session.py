@@ -24,6 +24,16 @@ def get_spark(
     ``shuffle_partitions`` defaults to the local core count — on a real
     cluster you would size it to ~2-3x total executor cores and let AQE
     coalesce; locally 200 default just adds scheduling overhead.
+
+    PySpark's DataFrame call-site capture is off
+    (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+    every ``functions``/``Column`` call walks the Python stack, tries to
+    import IPython, reads a conf and sets the origin in the JVM — about
+    280 captures per served anomaly request. The cost of turning it off: an AnalysisException's query
+    context no longer names the Python ``file:line`` that built the
+    failing expression. Pass the conf as ``"true"`` in ``extra_conf`` to
+    get it back while debugging (it is read once per process, at the
+    first PySpark call made under an active session).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     if shuffle_partitions is None:
@@ -48,6 +58,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Pin native BLAS/OMP pools inside Python workers to ONE thread
         # (guide §4.5): Spark already runs one worker per task slot, so a
         # multi-threaded GEMM inside each of N concurrent workers

@@ -52,10 +52,15 @@ class ModelStore:
         self.root = root
         os.makedirs(root, exist_ok=True)
 
+    @staticmethod
+    def new_revision() -> str:
+        """A revision name for a build starting now (epoch milliseconds)."""
+        return str(int(time.time() * 1000))
+
     def dump(
         self, model: Any, name: str, metadata: dict | None = None, revision: str | None = None
     ) -> str:
-        revision = revision or str(int(time.time() * 1000))
+        revision = revision or self.new_revision()
         d = os.path.join(self.root, revision, name)
         os.makedirs(d, exist_ok=True)
         with open(os.path.join(d, "model.pkl"), "wb") as f:

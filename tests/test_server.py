@@ -364,3 +364,210 @@ def test_cli_serve_smoke(served_root, tmp_path):
             proc.kill()
             raise AssertionError("serve did not exit on SIGTERM")
     assert rc == 0
+
+
+# ------------------------------------------------- serving-path parity
+PARITY_MODELS = {
+    "smm": {"kind": "DiffBasedAnomalyDetector", "window": 6},
+    "ewma": {"kind": "DiffBasedAnomalyDetector", "window": 6, "smoothing_method": "ewma"},
+    "lagged": {
+        "kind": "DiffBasedAnomalyDetector",
+        "window": 6,
+        "base_estimator": {"kind": "LaggedLinearModel", "lookback": 3},
+    },
+    "kfcv": {"kind": "DiffBasedKFCVAnomalyDetector", "window": 6, "n_splits": 3},
+}
+PARITY_REV = "1700000000000"
+
+
+def _series(start, rows, seed):
+    """X and y frames (ts + TAGS) at 1H; y has one NaN."""
+    rng = np.random.default_rng(seed)
+    ts = pd.date_range(start, periods=rows, freq="1h")
+    X = pd.DataFrame(np.cumsum(rng.normal(size=(rows, len(TAGS))), axis=0), columns=TAGS)
+    y = X + rng.normal(scale=0.1, size=X.shape)
+    y.iloc[rows // 2, 1] = np.nan
+    X.insert(0, "ts", ts)
+    y.insert(0, "ts", ts)
+    return X, y
+
+
+def _nested(frame):
+    return {t: {ts.isoformat(): v for ts, v in zip(frame["ts"], frame[t])} for t in TAGS}
+
+
+def _multipart(parts):
+    import base64
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    boundary = "paritybnd"
+    body = b""
+    for name, frame in parts.items():
+        buf = io.BytesIO()
+        pq.write_table(pa.Table.from_pandas(frame), buf)
+        body += (
+            f"--{boundary}\r\n"
+            f'Content-Disposition: form-data; name="{name}"; filename="{name}.parquet"\r\n'
+            "Content-Type: application/octet-stream\r\n"
+            "Content-Transfer-Encoding: base64\r\n\r\n"
+        ).encode() + base64.b64encode(buf.getvalue()) + b"\r\n"
+    return body + f"--{boundary}--\r\n".encode(), f"multipart/form-data; boundary={boundary}"
+
+
+def _json_tree(obj):
+    """``obj`` as JSON reads it back (NaN kept as the string 'NaN', so two
+    trees with NaN in the same places compare equal)."""
+    return json.loads(json.dumps(obj, default=str), parse_constant=str)
+
+
+@pytest.fixture(scope="module")
+def parity(spark, tmp_path_factory):
+    """One store revision holding the four detector shapes the server must
+    score exactly like ``model.anomaly``, fitted on 240 hourly rows."""
+    from gordo_spark.ml.models import model_from_definition
+
+    root = str(tmp_path_factory.mktemp("parity_models"))
+    store = ModelStore(root)
+    X, y = _series("2024-01-01", 240, 0)
+    Xs, ys = spark.createDataFrame(X), spark.createDataFrame(y.fillna(0.0))
+    for name, definition in PARITY_MODELS.items():
+        model = model_from_definition(definition)
+        model.fit(Xs, ys)
+        model.cross_validate(Xs, ys, n_splits=3)
+        store.dump(
+            model, name, {"build-metadata": {"dataset": {"resolution": "1H"}}},
+            revision=PARITY_REV,
+        )
+    Xr, yr = _series("2024-02-01", 48, 1)
+    return build_app(spark, root), store, Xr, yr
+
+
+@pytest.mark.parametrize("name", sorted(PARITY_MODELS))
+@pytest.mark.parametrize("payload_kind", ["json", "parquet-parts"])
+@pytest.mark.parametrize("all_columns", [False, True])
+def test_served_anomaly_equals_model_anomaly(spark, parity, name, payload_kind, all_columns):
+    """The served block (JSON and ?format=parquet) equals
+    ``model.anomaly(X, y)`` on Spark frames built from the same payload."""
+    import pyarrow.parquet as pq
+
+    from gordo_spark.sources.serving_io import dataframe_from_dict, dataframe_to_dict
+
+    app, store, X, y = parity
+    payload = {"X": _nested(X), "y": _nested(y)}
+    model, _ = store.load(name, PARITY_REV)
+    out = model.anomaly(
+        dataframe_from_dict(spark, payload["X"]),
+        dataframe_from_dict(spark, payload["y"]),
+        resolution="1H",
+    )
+    if not all_columns:
+        out = out.drop(*[c for c in out.columns if c.startswith("smooth_")])
+    expected = out.toPandas().sort_values("start", ignore_index=True)
+
+    if payload_kind == "json":
+        body, ctype = json.dumps(payload).encode(), "application/json"
+    else:
+        body, ctype = _multipart({"X": X, "y": y})
+    query = f"revision={PARITY_REV}" + ("&all_columns=true" if all_columns else "")
+    path = f"/{name}/anomaly/prediction?{query}"
+
+    r = call(app, path, "POST", body, content_type=ctype)
+    assert r["status"] == 200, r["body"][:500]
+    served = json.loads(r["body"])["data"]
+    assert _json_tree(served) == _json_tree(dataframe_to_dict(out, ts_col="start"))
+    assert any(k.startswith("smooth_") for k in served) == all_columns
+
+    r = call(app, path + "&format=parquet", "POST", body, content_type=ctype)
+    assert r["status"] == 200
+    got = pq.read_table(io.BytesIO(r["body"])).to_pandas()
+    want = expected.drop(columns="start").assign(end=expected["end"].map(lambda t: t.isoformat()))
+    pd.testing.assert_frame_equal(got, want)
+
+
+@pytest.mark.parametrize("name", ["smm", "lagged"])
+def test_served_prediction_of_positional_rows(spark, parity, name):
+    """Positional-list JSON (integer row keys, columns by position) on
+    /prediction equals the base model's predict. Anomaly scoring needs
+    timestamps (``end = start + resolution``), so it takes no positional
+    rows."""
+    from gordo_spark.sources.serving_io import (
+        dataframe_from_dict,
+        dataframe_to_dict,
+        verify_columns,
+    )
+
+    app, store, X, y = parity
+    rows = X[TAGS].values.tolist()
+    base = store.load(name, PARITY_REV)[0].base
+    expected = base.predict(verify_columns(dataframe_from_dict(spark, rows), base.feature_cols))
+    r = call(app, f"/{name}/prediction?revision={PARITY_REV}", "POST",
+             {"X": rows, "y": y[TAGS].values.tolist()})
+    assert r["status"] == 200, r["body"][:500]
+    assert _json_tree(json.loads(r["body"])["data"]) == _json_tree(dataframe_to_dict(expected))
+
+
+def test_repeat_anomaly_request_is_one_job_on_the_cached_plan(spark, parity, monkeypatch):
+    """A second request to a loaded model runs exactly one Spark job (the
+    result's collect), in JSON and in parquet, on the column plan built
+    for the first request."""
+    from gordo_spark import serving
+
+    app, _, X, y = parity
+    applied = []
+    apply_stages = serving.apply_stages
+
+    def spy(df, stages):
+        applied.append(stages)
+        return apply_stages(df, stages)
+
+    monkeypatch.setattr(serving, "apply_stages", spy)
+    body = json.dumps({"X": _nested(X), "y": _nested(y)}).encode()
+    sc = spark.sparkContext
+    for fmt in ("json", "parquet"):
+        path = f"/smm/anomaly/prediction?revision={PARITY_REV}&format={fmt}"
+        assert call(app, path, "POST", body)["status"] == 200
+        group = f"repeat-anomaly-{fmt}"
+        sc.setJobGroup(group, group)
+        try:
+            r = call(app, path, "POST", body)
+        finally:
+            sc.setJobGroup("", "")
+        assert r["status"] == 200
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert len(applied) == 4 and all(s is applied[0] for s in applied)
+
+
+def test_build_machines_serves_the_fleet_from_one_revision(spark, sf_dir, tmp_path):
+    """build_machines writes every machine it builds into one revision, so
+    /models lists the fleet and unpinned requests resolve for each; the
+    shared scan it cached is released when the builds finish."""
+    from gordo_spark.builder import build_machines
+
+    def machine(name):
+        return Machine.from_config({
+            "name": name,
+            "dataset": {
+                "tag_list": TAGS,
+                "resolution": "1H",
+                "interpolation_method": "ffill",
+                "interpolation_limit": "6H",
+                "data_provider": {"type": "EventsAsSensorProvider", "sf_dir": sf_dir},
+            },
+            "model": {"kind": "LinearModel"},
+            "evaluation": {"cv_mode": "full_build", "n_splits": 3},
+        })
+
+    jsc = spark.sparkContext._jsc
+    # ids, not a count: earlier tests' leftovers may be cleaned meanwhile
+    persisted = set(jsc.getPersistentRDDs().keys())
+    store = ModelStore(str(tmp_path / "models"))
+    build_machines(spark, [machine("fleet-a"), machine("fleet-b")], store, max_workers=2)
+    assert set(jsc.getPersistentRDDs().keys()) <= persisted
+    assert len(store.revisions()) == 1
+    app = build_app(spark, store.root)
+    r = call(app, "/models")
+    assert json.loads(r["body"])["models"] == ["fleet-a", "fleet-b"]
+    for name in ("fleet-a", "fleet-b"):
+        assert call(app, f"/{name}/metadata")["status"] == 200

@@ -100,3 +100,12 @@ def test_anomaly_requires_y(spark, built, payload):
     root, _ = built
     with pytest.raises(ValueError, match="y is required"):
         anomaly_response(spark, root, "serve-machine", {"X": payload["X"]})
+
+
+def test_get_spark_turns_call_site_capture_off(spark):
+    """PySpark's per-call stack capture costs most of a request's plan
+    building; get_spark sessions run without it."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False
