@@ -459,83 +459,79 @@ def connected_components(
     selection step after LSH/Jaccard pair generation (keep one doc per
     component, e.g. the component id itself).
 
-    Min-label propagation: each iteration joins labels across (symmetric)
-    edges and takes the min; near-dup components are tiny (pairs/chains of
-    a few docs), so convergence takes ~diameter iterations — the driver
-    loop stops early when an iteration changes nothing (one cheap count
-    per iteration; the data never leaves the cluster). Frames are cached
-    per iteration and the lineage is truncated by localCheckpoint to keep
-    the plan from growing exponentially at scale.
+    Min-label propagation over symmetric edges plus one self-loop per
+    node: each iteration is one join of the labels across the edges and
+    one ``min`` aggregate, which takes the new label (the self-loop
+    brings the node's own) and carries the old one as the label over
+    the self-loop. Near-dup components are tiny (pairs/chains of a few
+    docs), so convergence takes ~diameter iterations — the driver loop
+    stops early when an iteration changes nothing. Each iteration's
+    labels are a lazy localCheckpoint (the lineage would otherwise grow
+    by a join per iteration), materialized by the convergence count, so
+    an iteration runs one action; the previous iteration's checkpoint is
+    released once the next one is materialized. The returned labels
+    hold the last checkpoint: at most one persisted RDD outlives the
+    call.
     """
     from gordo_spark.functions.partitioning import adaptive_partitions
 
-    # symmetrize row-locally (explode of a 2-struct array, the pagerank
-    # `dirs` shape) instead of unioning two selects over the pair frame:
-    # the union form referenced the WHOLE upstream candidate-pair
-    # subtree twice — exchange reuse usually dedupes it, but reuse is
-    # best-effort (it broke cold: measured 4.7 s vs 1.25 s on the LSH
-    # subtree) while one reference is guaranteed (r12)
+    # symmetrize and add the self-loops row-locally (explode of a struct
+    # array, the pagerank `dirs` shape) instead of unioning selects over
+    # the pair frame: the union form referenced the WHOLE upstream
+    # candidate-pair subtree several times — exchange reuse usually
+    # dedupes it, but reuse is best-effort (it broke cold: measured 4.7 s
+    # vs 1.25 s on the LSH subtree) while one reference is guaranteed
+    a, b = F.col(a_col), F.col(b_col)
     e0 = pairs.select(
         F.explode(
             F.array(
-                F.struct(
-                    F.col(a_col).alias("src"), F.col(b_col).alias("dst")
-                ),
-                F.struct(
-                    F.col(b_col).alias("src"), F.col(a_col).alias("dst")
-                ),
+                *(
+                    F.struct(s.alias("src"), d.alias("dst"))
+                    for s, d in ((a, b), (b, a), (a, a), (b, b))
+                )
             )
         ).alias("_e")
     ).select("_e.src", "_e.dst")
-    # r11 (guide §2.4): every iteration joins the edge frame on dst —
-    # hash-partition + sort it by dst ONCE so the per-iteration join
-    # reads the cache with no edge-side Exchange/Sort and only the
-    # node-cardinality label frame moves. Repartition BEFORE distinct:
-    # partitioning on dst is a subset of the (src, dst) clustering, so
-    # the dedup aggregate runs exchange-free on the landed layout.
-    # Partition count is scale-adaptive (adaptive_partitions).
+    # every iteration joins the edge frame on dst — hash-partition + sort
+    # it by dst ONCE so the per-iteration join reads the cache with no
+    # edge-side Exchange/Sort and only the node-cardinality label frame
+    # moves. Repartition BEFORE distinct: partitioning on dst is a subset
+    # of the (src, dst) clustering, so the dedup aggregate runs
+    # exchange-free on the landed layout. Partition count is
+    # scale-adaptive (adaptive_partitions).
     edges = (
         e0.repartition(adaptive_partitions(e0), "dst")
         .distinct()
         .sortWithinPartitions("dst")
         .cache()
     )
-    # materialize now: an unmaterialized cache reports Unknown
-    # partitioning (unfinalized AQE subtree), which would re-Exchange
-    # the edge side in every iteration's join (see graph.hits)
-    edges.count()
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("component"))
-        .cache()
+    # no count to materialize the cache first: adaptive execution runs it
+    # as a query stage of the first iteration and then plans that join
+    # without an edge-side Exchange. The self-loops are the initial
+    # labels; naming dst `id` keeps the cache's partitioning on the
+    # join key.
+    labels = edges.filter(F.col("src") == F.col("dst")).select(
+        F.col("dst").alias("id"), F.col("src").alias("component")
     )
+    kept = None
     for _ in range(max_iter):
-        neighbor_min = (
+        stepped = (
             edges.join(labels, edges["dst"] == labels["id"])
             .groupBy(F.col("src").alias("id"))
-            .agg(F.min("component").alias("_nbr"))
-        )
-        # carry the OLD label through the checkpointed step frame so the
-        # convergence check is a plain filter-count over already-
-        # materialized partitions — the previous form re-joined the new
-        # labels against the old ones, paying an extra shuffle join + job
-        # every iteration just to count changes (r11 optimization;
-        # output unchanged: labels is the same least() projection)
-        stepped = (
-            labels.join(neighbor_min, "id", "left")
-            .select(
-                "id",
-                F.col("component").alias("_old"),
-                F.least(
-                    F.col("component"), F.coalesce(F.col("_nbr"), F.col("component"))
-                ).alias("component"),
+            .agg(
+                F.min("component").alias("component"),
+                F.min(
+                    F.when(F.col("src") == F.col("dst"), F.col("component"))
+                ).alias("_old"),
             )
-            .localCheckpoint()
+            .localCheckpoint(eager=False)
         )
-        changed = stepped.filter(
-            F.col("component") != F.col("_old")
-        ).count()
+        changed = stepped.filter(F.col("component") != F.col("_old")).count()
+        if kept is not None:
+            # release the RDD the previous checkpoint reads (a checkpoint
+            # is no CacheManager entry, so DataFrame.unpersist misses it)
+            kept._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        kept = stepped
         labels = stepped.select("id", "component")
         if changed == 0:
             break

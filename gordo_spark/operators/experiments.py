@@ -1471,104 +1471,34 @@ def msprt_monitor(
     look simultaneously — stop whenever you like. ``tau2`` is the
     mixture prior on effect size (set it near the MDE^2).
 
-    Plan shape: one (window, variant) count aggregate; cumulative sums
-    via a window PARTITIONED BY VARIANT (never keyless — 2 partitions
-    x #windows); the two variants meet in an equi-join on the window
-    start; the running max runs as a bounded self range-join on the
-    1-row-per-window Lambda frame (W^2 pairs with W
-    experiment-calendar-bounded — weeks of daily windows, not corpus
-    rows). Per-event Bernoulli counting (stated; collapse to units
-    upstream for per-user analysis). Output per window:
-    ``(window_start, n_a, n_b, conv_a, conv_b, diff, lam, p_always,
-    crossed)``.
+    Plan shape: one (window, variant) count aggregate over the events,
+    then the readout of :func:`msprt_from_counts` on it. Events whose
+    window is null (null ``ts``) count in no window. Per-event
+    Bernoulli counting (stated; collapse to units upstream for per-user
+    analysis). Output per window: ``(window_start, n_a, n_b, conv_a,
+    conv_b, diff, lam, p_always, crossed)``.
     """
-    from pyspark.sql import Window
-
     from gordo_spark.functions.timeutil import offset_alias_to_seconds
 
     secs = int(offset_alias_to_seconds(window))
-    d = ab_assign(
-        events.select(unit_col, success_col, ts_col), unit_col, 2, salt
-    ).select(
-        F.timestamp_seconds(
-            F.floor(F.col(ts_col).cast("timestamp").cast("double") / secs)
-            .cast("long")
-            * secs
-        ).alias("_w"),
-        "variant",
-        F.col(success_col).cast("int").alias("_s"),
-    )
-    # pin the (window, variant) count table ONCE (r12, guide §5): it is
-    # experiment-calendar bounded (#windows x 2 rows), while downstream
-    # the a/b split, the window join, and the running-max self range-join
-    # re-referenced the unpinned subtree until the plan held TWELVE
-    # parquet scans of the event table (plans/r12/msprt_monitor_before) —
-    # each re-running the per-event md5 assignment. One scan now.
-    per = d.groupBy("_w", "variant").agg(
-        F.count(F.lit(1)).alias("_n"), F.sum("_s").alias("_c")
-    ).localCheckpoint()
-    wv = Window.partitionBy("variant").orderBy("_w").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = per.select(
-        "_w",
-        "variant",
-        F.sum("_n").over(wv).alias("_cn"),
-        F.sum("_c").over(wv).alias("_cc"),
-    )
-    a = cum.filter(F.col("variant") == 0).select(
-        "_w", F.col("_cn").alias("n_a"), F.col("_cc").alias("conv_a")
-    )
-    b = cum.filter(F.col("variant") == 1).select(
-        "_w", F.col("_cn").alias("n_b"), F.col("_cc").alias("conv_b")
-    )
-    j = a.join(b, "_w")
-    n0 = F.col("n_a").cast("double")
-    n1 = F.col("n_b").cast("double")
-    p0 = F.col("conv_a") / n0
-    p1 = F.col("conv_b") / n1
-    pp = (F.col("conv_a") + F.col("conv_b")) / (n0 + n1)
-    v = pp * (1 - pp) * (1.0 / n0 + 1.0 / n1)
-    theta = p1 - p0
-    t2 = F.lit(float(tau2))
-    lam = F.when(
-        v > 0,
-        F.sqrt(v / (v + t2))
-        * F.exp(theta * theta * t2 / (2.0 * v * (v + t2))),
-    )
-    lamf = j.select(
-        F.col("_w"), "n_a", "n_b", "conv_a", "conv_b",
-        theta.alias("_theta"), lam.alias("_lam"),
-    )
-    run = (
-        lamf.alias("x")
-        .join(
-            lamf.select("_w", "_lam").alias("y"),
-            F.col("y._w") <= F.col("x._w"),
+    counts = (
+        ab_assign(
+            events.select(unit_col, success_col, ts_col), unit_col, 2, salt
         )
-        .groupBy("x._w")
-        .agg(F.max("y._lam").alias("_mx"))
-        .select(F.col("_w"), F.col("_mx"))
-    )
-    return (
-        lamf.join(run, "_w")
-        .select(
-            F.col("_w").alias("window_start"),
-            "n_a",
-            "n_b",
-            "conv_a",
-            "conv_b",
-            qround(F.col("_theta"), 6).alias("diff"),
-            qround(F.col("_lam"), 6).alias("lam"),
-            qround(
-                F.least(F.lit(1.0), 1.0 / F.col("_mx")), 6
-            ).alias("p_always"),
-            F.coalesce(
-                F.col("_mx") >= F.lit(1.0 / float(alpha)), F.lit(False)
-            ).alias("crossed"),
+        .groupBy(
+            F.timestamp_seconds(
+                F.floor(F.col(ts_col).cast("timestamp").cast("double") / secs)
+                .cast("long")
+                * secs
+            ).alias("window_start"),
+            "variant",
         )
-        .orderBy("window_start")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.col(success_col).cast("int")).alias("n_success"),
+        )
     )
+    return msprt_from_counts(counts, tau2, alpha)
 
 
 def msprt_from_counts(
@@ -1583,56 +1513,60 @@ def msprt_from_counts(
     always-valid sequential verdict, the stream_srm_counts /
     srm_verdict_from_counts two-stage pattern applied to the mSPRT).
     Expects columns ``(window_start, variant, n_events, n_success)``;
-    identical formula path to msprt_monitor, so monitor == counts-then-
-    readout is pinned in tests. Output matches msprt_monitor.
+    msprt_monitor is this readout over its own counts. Output matches
+    msprt_monitor.
+
+    Plan shape: one aggregate by window with a conditional sum per
+    variant (0 and 1), then one time-ordered window spec over that
+    #windows-row frame — experiment-calendar bounded, so the keyless
+    window is one small partition, sorted once — gives the cumulative
+    sums and, over them, the running max of Lambda; no join and no
+    pin. A window that lacks a variant adds to the
+    cumulative sums of later windows but is not reported and has no
+    Lambda; rows with a null ``window_start`` count nowhere.
     """
     from pyspark.sql import Window
 
-    wv = Window.partitionBy("variant").orderBy("window_start").rowsBetween(
-        Window.unboundedPreceding, 0
+    upto = Window.orderBy("_w").rowsBetween(Window.unboundedPreceding, 0)
+    v = F.col("variant")
+    per = (
+        counts.filter(F.col("window_start").isNotNull())
+        .groupBy(F.col("window_start").alias("_w"))
+        .agg(
+            (F.bool_or(v == 0) & F.bool_or(v == 1)).alias("_both"),
+            *(
+                F.sum(F.when(v == i, F.col(c))).alias(f"_{c}{i}")
+                for i in (0, 1)
+                for c in ("n_events", "n_success")
+            ),
+        )
     )
-    cum = counts.select(
-        F.col("window_start").alias("_w"),
-        "variant",
-        F.sum("n_events").over(wv).alias("_cn"),
-        F.sum("n_success").over(wv).alias("_cc"),
+    cum = per.select(
+        "_w",
+        "_both",
+        F.sum("_n_events0").over(upto).alias("n_a"),
+        F.sum("_n_events1").over(upto).alias("n_b"),
+        F.sum("_n_success0").over(upto).alias("conv_a"),
+        F.sum("_n_success1").over(upto).alias("conv_b"),
     )
-    a = cum.filter(F.col("variant") == 0).select(
-        "_w", F.col("_cn").alias("n_a"), F.col("_cc").alias("conv_a")
-    )
-    b = cum.filter(F.col("variant") == 1).select(
-        "_w", F.col("_cn").alias("n_b"), F.col("_cc").alias("conv_b")
-    )
-    j = a.join(b, "_w")
     n0 = F.col("n_a").cast("double")
     n1 = F.col("n_b").cast("double")
     p0 = F.col("conv_a") / n0
     p1 = F.col("conv_b") / n1
     pp = (F.col("conv_a") + F.col("conv_b")) / (n0 + n1)
-    v = pp * (1 - pp) * (1.0 / n0 + 1.0 / n1)
+    var = pp * (1 - pp) * (1.0 / n0 + 1.0 / n1)
     theta = p1 - p0
     t2 = F.lit(float(tau2))
+    # null where a variant is missing, so the running max skips the window
     lam = F.when(
-        v > 0,
-        F.sqrt(v / (v + t2))
-        * F.exp(theta * theta * t2 / (2.0 * v * (v + t2))),
+        F.col("_both") & (var > 0),
+        F.sqrt(var / (var + t2))
+        * F.exp(theta * theta * t2 / (2.0 * var * (var + t2))),
     )
-    lamf = j.select(
-        F.col("_w"), "n_a", "n_b", "conv_a", "conv_b",
-        theta.alias("_theta"), lam.alias("_lam"),
-    )
-    run = (
-        lamf.alias("x")
-        .join(
-            lamf.select("_w", "_lam").alias("y"),
-            F.col("y._w") <= F.col("x._w"),
-        )
-        .groupBy("x._w")
-        .agg(F.max("y._lam").alias("_mx"))
-        .select(F.col("_w"), F.col("_mx"))
-    )
+    lamf = cum.select("*", theta.alias("_theta"), lam.alias("_lam"))
     return (
-        lamf.join(run, "_w")
+        lamf.select("*", F.max("_lam").over(upto).alias("_mx"))
+        .filter("_both")
         .select(
             F.col("_w").alias("window_start"),
             "n_a",

@@ -15,16 +15,71 @@ encodings the lake has shipped with:
   to the session-zone TIMESTAMP (sessions here pin UTC, so wall-clock
   values are preserved exactly — the same naive-as-UTC reading DuckDB
   applies).
+
+``read_table`` reads through ``read_parquet``, which infers a path's
+schema once and reuses it while the files are unchanged.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 # column names that are timestamps in the lake schemas; if one of these
 # arrives as LongType it was a TIMESTAMP(NANOS) parquet column.
 _TS_COLUMNS = {"ts", "o_orderdate", "l_shipdate"}
+
+# session confs that change what parquet schema inference returns
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.mergeSchema",
+)
+# path -> (stamp, inferred schema); see read_parquet
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _stamp(spark: SparkSession, path: str) -> tuple | None:
+    """(name, size, mtime_ns) of every file under ``path`` plus the
+    inference confs, or None when ``path`` is not a local file or
+    directory (a URI, a glob, a missing path)."""
+    try:
+        files = (
+            sorted(os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs)
+            if os.path.isdir(path)
+            else [path]
+        )
+        stats = tuple(
+            (f, st.st_size, st.st_mtime_ns) for f in files for st in [os.stat(f)]
+        )
+    except (OSError, ValueError):
+        return None
+    return stats, tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per
+    version of the files. Schema inference starts a Spark job
+    (``SchemaMergeUtils.mergeSchemasInParallel``) on every read, even of
+    one file, and a fleet build reads the same lake for every machine; a
+    later read of unchanged files passes the kept schema instead and
+    starts none. The kept schema is keyed by each file's name, size and
+    mtime and by the confs that shape inference, so a rewritten file or
+    a changed conf infers again; a path that cannot be stat'ed always
+    infers.
+    """
+    stamp = _stamp(spark, path)
+    kept = _SCHEMAS.get(path)
+    if stamp is not None and kept is not None and kept[0] == stamp:
+        return spark.read.schema(kept[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if stamp is not None:
+        _SCHEMAS[path] = (stamp, df.schema)
+    return df
 
 
 def read_table(
@@ -34,7 +89,8 @@ def read_table(
     ts_range: tuple | None = None,
     ts_col: str = "ts",
 ) -> DataFrame:
-    """Read ``{sf_dir}/{name}.parquet`` with nanosecond-timestamp rescue.
+    """Read ``{sf_dir}/{name}.parquet`` with nanosecond-timestamp rescue,
+    through :func:`read_parquet` (no inference job for unchanged files).
 
     ``ts_range=(start, end)`` applies a half-open [start, end) predicate on
     ``ts_col`` *before* the ns->us conversion when the column is raw nanos —
@@ -44,7 +100,7 @@ def read_table(
     monotone, so filtering at ns granularity is exact for µs bounds.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     for f in df.schema.fields:
         if f.name in _TS_COLUMNS and isinstance(f.dataType, LongType):
             if ts_range is not None and f.name == ts_col:

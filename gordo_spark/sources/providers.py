@@ -20,6 +20,8 @@ from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from gordo_spark.sources.io import read_parquet, read_table
+
 _REGISTRY: dict[str, type] = {}
 
 
@@ -74,7 +76,9 @@ class ParquetDataProvider(DataProvider):
         self.path, self.tag_col, self.ts_col, self.value_col = path, tag_col, ts_col, value_col
 
     def read(self, spark, tags, train_start_date=None, train_end_date=None):
-        df = spark.read.parquet(self.path).select(
+        # one schema inference per version of the lake's files, not one
+        # per machine dataset
+        df = read_parquet(spark, self.path).select(
             F.col(self.tag_col).alias("tag"),
             F.col(self.ts_col).cast("timestamp").alias("ts"),
             # NaN means "missing" in the engine (pandas skipna parity) —
@@ -94,8 +98,6 @@ class EventsAsSensorProvider(DataProvider):
         self.sf_dir = sf_dir
 
     def read(self, spark, tags, train_start_date=None, train_end_date=None):
-        from gordo_spark.sources.io import read_table
-
         # ts range is pushed down in raw-nanos space inside read_table (it
         # would not reach the scan if applied after the ns->us conversion)
         df = read_table(

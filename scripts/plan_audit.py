@@ -167,9 +167,6 @@ ACCEPTED = {
     "chisq_drift": "1-row time-range-midpoint scalar broadcast to the "
     "stream (the psi_drift split convention)",
     # round 9
-    "msprt_monitor": "running-max self range-join on the 1-row-per-window "
-    "Lambda frame — both sides aggregate-bounded by the experiment "
-    "CALENDAR (weeks of windows), never event rows",
     "holm_ab": "K^2 rank/step self-joins on the checkpointed K-row metric "
     "frame (K = a handful of metrics) + 1-row variant totals",
     "conformal_ols": "1-row fitted-coefficient / quantile / count scalar "
@@ -226,6 +223,10 @@ SINGLE_SERIES_OK = {
     # — day-resolution-bounded, never subject-sized (the survival_km
     # duration-grid convention)
     "logrank",
+    # the cumulative-sum and running-max window runs over the
+    # 1-row-per-calendar-window count aggregate (#windows rows: weeks of
+    # daily windows), never event rows
+    "msprt_monitor",
     # rank windows over the HOURLY-RESAMPLED aligned tag matrix — the
     # calendar grid bounds its cardinality (#hours in range), not the
     # raw event volume; corpus-sized spearman would need part_cols
